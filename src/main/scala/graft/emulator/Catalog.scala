@@ -1,23 +1,32 @@
 package graft.emulator
 
-import java.nio.file.{Files, Path}
 import java.util.concurrent.ConcurrentHashMap
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.catalog.{BucketSpec, CatalogStorageFormat, CatalogTable, CatalogTableType}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 import scala.jdk.CollectionConverters._
 
 /** Snowflake object model over Spark's 2-level catalog (reference
   * `pkg/metadata/repository.go`): databases are Spark databases, Snowflake
   * schemas are metadata-only and flattened into the table name
-  * (`DATABASE.SCHEMA_TABLE`, `table_naming.go:23-40`), tables are managed
-  * parquet tables. Our own metadata rows (comments, column defs, schema
-  * list) live in memory the way the reference keeps `_metadata_*` tables.
+  * (`DATABASE.SCHEMA_TABLE`, `table_naming.go:23-40`). Our own metadata
+  * rows (comments, column defs, schema list) live in memory the way the
+  * reference keeps `_metadata_*` tables.
   *
-  * Physical writes that replace table content go through a temp-parquet
-  * swap (`overwriteTable`) because Spark refuses to overwrite a table from
-  * a plan that reads it; mirrors the reference's write safety, where all
-  * writes are serialized (`pkg/connection/manager.go:39-63`) — here a
-  * per-table lock.
+  * Storage is a sequence of immutable table versions. A table is an
+  * external parquet table whose location is one version directory under
+  * the table's root. A statement that replaces content writes it once into
+  * a fresh directory and then points the table there (the catalog half of
+  * `ALTER TABLE ... SET LOCATION`), under a per-table lock — the
+  * reference serializes all writes (`pkg/connection/manager.go:39-63`).
+  * INSERT and COPY append files to the current directory. A [[Version]]
+  * is the file list and schema at one moment, so time travel, transaction
+  * snapshots, stream baselines and drop retention hold versions rather
+  * than copies, and [[sweep]] deletes a directory once neither a table nor
+  * a registered holder references it.
   */
 final class Catalog(val spark: SparkSession) {
   import Catalog._
@@ -27,9 +36,28 @@ final class Catalog(val spark: SparkSession) {
   private val tables = new ConcurrentHashMap[String, TableMeta]() // key db.schema.table
   private val fileFormats = new ConcurrentHashMap[String, FileFormatMeta]()
   private val tableLocks = new ConcurrentHashMap[String, Object]()
+  /** Version directories this catalog wrote and has not yet deleted. */
+  private val ownedDirs = ConcurrentHashMap.newKeySet[String]()
+  private val holders = new java.util.concurrent.CopyOnWriteArrayList[() => Iterable[Version]]()
+  /** Orders location swaps against [[sweep]], so a sweep never sees a
+    * directory as owned before it sees it as current. */
+  private val swapLock = new Object
 
   private def up(s: String) = s.trim.toUpperCase(java.util.Locale.ROOT)
   private def tKey(r: TableNaming.Ref) = s"${r.database}.${r.schema}.${r.table}"
+  private def sessionCatalog = spark.sessionState.catalog
+  private def ident(r: TableNaming.Ref) =
+    TableIdentifier(s"${r.schema}_${r.table}", Some(r.database))
+  /** Table roots live outside Spark's database directories, so DROP
+    * DATABASE leaves held versions to the sweep. */
+  private lazy val tablesRoot = new HPath(spark.conf.get("spark.sql.warehouse.dir"), "graft_tables")
+  private lazy val fs = tablesRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def dirKey(p: HPath): String = fs.makeQualified(p).toString
+  private def noTable(r: TableNaming.Ref) = SnowflakeError.notFound(
+    s"table ${r.database}.${r.schema}.${r.table} does not exist")
+  private def columnsOf(r: TableNaming.Ref): Seq[ColumnDef] =
+    spark.table(sparkTableName(r)).schema.fields.toSeq.map(f =>
+      ColumnDef(up(f.name), TypeMapper.toSnowflakeTypeName(f.dataType), f.nullable))
 
   def lockFor(r: TableNaming.Ref): Object =
     tableLocks.computeIfAbsent(tKey(r), _ => new Object)
@@ -44,7 +72,9 @@ final class Catalog(val spark: SparkSession) {
       throw SnowflakeError.alreadyExists(s"database $n already exists")
     databases.putIfAbsent(n, DatabaseMeta(n))
     schemas.putIfAbsent(s"$n.PUBLIC", SchemaMeta(n, "PUBLIC"))
-    spark.sql(s"CREATE DATABASE IF NOT EXISTS `$n`")
+    // REST v2 calls this per statement: skip the SQL round when it exists
+    if (!sessionCatalog.databaseExists(n))
+      spark.sql(s"CREATE DATABASE IF NOT EXISTS `$n`")
   }
 
   def dropDatabase(name: String, ifExists: Boolean = false): Unit = {
@@ -54,11 +84,10 @@ final class Catalog(val spark: SparkSession) {
       throw SnowflakeError.notFound(s"database $n does not exist")
     }
     databases.remove(n)
-    schemas.keySet.asScala.filter(_.startsWith(n + ".")).toSeq
-      .foreach(schemas.remove)
-    tables.keySet.asScala.filter(_.startsWith(n + ".")).toSeq
-      .foreach(tables.remove)
+    schemas.keySet.removeIf(_.startsWith(n + "."))
+    tables.keySet.removeIf(_.startsWith(n + "."))
     spark.sql(s"DROP DATABASE IF EXISTS `$n` CASCADE")
+    sweep()
   }
 
   def listDatabases(): Seq[DatabaseMeta] =
@@ -98,8 +127,12 @@ final class Catalog(val spark: SparkSession) {
 
   def getTable(r: TableNaming.Ref): Option[TableMeta] = Option(tables.get(tKey(r)))
 
-  /** Buckets per clustered table: fixed so appends always match the
-    * existing spec; sized for local mode, a deployment would raise it. */
+  /** Snowflake CLUSTER BY -> Spark bucketed table: joins/aggregations on
+    * the cluster key between co-clustered tables read pre-partitioned data
+    * and skip the shuffle entirely — the physical meaning clustering has in
+    * Snowflake, expressed in Spark's storage layer. Buckets per clustered
+    * table: fixed so appends always match the existing spec; sized for
+    * local mode, a deployment would raise it. */
   val ClusterBuckets = 16
 
   def createTable(r: TableNaming.Ref, columns: Seq[ColumnDef],
@@ -110,37 +143,20 @@ final class Catalog(val spark: SparkSession) {
       if (!orReplace) throw SnowflakeError.alreadyExists(
         s"table ${r.database}.${r.schema}.${r.table} already exists")
     }
-    createDatabase(r.database)
-    createSchema(r.database, r.schema, ifNotExists = true)
+    // NOT NULL stays in the column defs: Spark's schema is all-nullable,
+    // as a table Spark writes itself would be
     val struct = StructType(columns.map(c =>
       org.apache.spark.sql.types.StructField(
-        c.name, TypeMapper.toSparkType(c.snowflakeType), c.nullable)))
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], struct)
-    write(empty, clusterKey).mode(SaveMode.Overwrite)
-      .saveAsTable(sparkTableName(r))
+        c.name, TypeMapper.toSparkType(c.snowflakeType), nullable = true)))
+    commit(r, None, struct, clusterKey)
     tables.put(tKey(r), TableMeta(r.database, r.schema, r.table, "BASE TABLE",
       columns, clusterKey = clusterKey))
   }
 
-  /** Snowflake CLUSTER BY -> Spark bucketed table: joins/aggregations on
-    * the cluster key between co-clustered tables read pre-partitioned data
-    * and skip the shuffle entirely — the physical meaning clustering has in
-    * Snowflake, expressed in Spark's storage layer. */
-  private def write(df: DataFrame, clusterKey: Option[String]) =
-    clusterKey match {
-      case Some(k) =>
-        df.write.format("parquet").bucketBy(ClusterBuckets, k).sortBy(k)
-      case None => df.write.format("parquet")
-    }
-
   /** Register a table created via raw SQL pass-through (CTAS etc.), reading
     * the column defs back from the physical table. */
   def registerExisting(r: TableNaming.Ref): Unit = {
-    val df = spark.table(sparkTableName(r))
-    val cols = df.schema.fields.toSeq.map(f =>
-      ColumnDef(up(f.name), TypeMapper.toSnowflakeTypeName(f.dataType), f.nullable))
-    createDatabase(r.database)
+    val cols = columnsOf(r)
     createSchema(r.database, r.schema, ifNotExists = true)
     val ck = getTable(r).flatMap(_.clusterKey)
     tables.put(tKey(r), TableMeta(r.database, r.schema, r.table, "BASE TABLE",
@@ -150,12 +166,8 @@ final class Catalog(val spark: SparkSession) {
   /** Register a view just created via SQL; columns read from the resolved
     * plan. Views carry type VIEW in metadata like the reference's table
     * rows (`repository.go:42-52`). */
-  def registerView(r: TableNaming.Ref): Unit = {
-    val df = spark.table(sparkTableName(r))
-    val cols = df.schema.fields.toSeq.map(f =>
-      ColumnDef(up(f.name), TypeMapper.toSnowflakeTypeName(f.dataType), f.nullable))
-    tables.put(tKey(r), TableMeta(r.database, r.schema, r.table, "VIEW", cols))
-  }
+  def registerView(r: TableNaming.Ref): Unit =
+    tables.put(tKey(r), TableMeta(r.database, r.schema, r.table, "VIEW", columnsOf(r)))
 
   def dropView(r: TableNaming.Ref, ifExists: Boolean = false): Unit = {
     if (tables.remove(tKey(r)) == null && !ifExists)
@@ -164,11 +176,12 @@ final class Catalog(val spark: SparkSession) {
     spark.sql(s"DROP VIEW IF EXISTS ${sparkTableName(r)}")
   }
 
+  /** The Spark table is external, so its files stay for the versions
+    * still holding them; the sweep deletes the rest. */
   def dropTable(r: TableNaming.Ref, ifExists: Boolean = false): Unit = {
-    if (tables.remove(tKey(r)) == null && !ifExists)
-      throw SnowflakeError.notFound(
-        s"table ${r.database}.${r.schema}.${r.table} does not exist")
+    if (tables.remove(tKey(r)) == null && !ifExists) throw noTable(r)
     spark.sql(s"DROP TABLE IF EXISTS ${sparkTableName(r)}")
+    sweep()
   }
 
   def listTables(db: String): Seq[TableMeta] =
@@ -176,33 +189,106 @@ final class Catalog(val spark: SparkSession) {
       .sortBy(t => (t.schema, t.table))
 
   def tableDf(r: TableNaming.Ref): DataFrame = {
-    if (!tableExists(r))
-      throw SnowflakeError.notFound(
-        s"table ${r.database}.${r.schema}.${r.table} does not exist")
+    if (!tableExists(r)) throw noTable(r)
     spark.table(sparkTableName(r))
   }
 
-  /** Replace table content atomically-per-table: materialize the new rows
-    * to a temp parquet dir first (the plan may read the table being
-    * replaced), then overwrite under the table lock. */
-  def overwriteTable(r: TableNaming.Ref, df: DataFrame): Unit =
+  /** Replace table content with `df`, written once into a fresh version
+    * directory (the plan may read the table being replaced: it reads the
+    * old directory). `keepSchema` casts `df` to the table's schema, so a
+    * widened expression type never reaches the files; DDL that changes the
+    * columns passes false. Creates the table when it does not exist yet. */
+  def overwriteTable(r: TableNaming.Ref, df: DataFrame,
+      keepSchema: Boolean = true): Unit =
     lockFor(r).synchronized {
-      val ck = getTable(r).flatMap(_.clusterKey)
-      val tmp = Files.createTempDirectory("graft_cow")
-      try {
-        df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-        write(spark.read.parquet(tmp.toString), ck)
-          .mode(SaveMode.Overwrite)
-          .saveAsTable(sparkTableName(r))
-      } finally deleteRecursively(tmp)
+      val schema = physical(r).filter(_ => keepSchema).map(_.schema)
+        .getOrElse(StructType(df.schema.map(_.copy(nullable = true))))
+      commit(r, Some(df), schema, getTable(r).flatMap(_.clusterKey))
     }
 
+  /** Append `df` (in the table's column order) to the current directory;
+    * a clustered table's spec buckets the new files. */
   def appendToTable(r: TableNaming.Ref, df: DataFrame): Unit =
+    lockFor(r).synchronized(df.write.insertInto(sparkTableName(r)))
+
+  // ---- versions --------------------------------------------------------
+
+  private def physical(r: TableNaming.Ref): Option[CatalogTable] =
+    scala.util.Try(sessionCatalog.getTableMetadata(ident(r))).toOption
+
+  /** The table's current version, tagged with `queryId`. */
+  def version(r: TableNaming.Ref, queryId: String = ""): Version =
     lockFor(r).synchronized {
-      write(df, getTable(r).flatMap(_.clusterKey))
-        .mode(SaveMode.Append)
-        .saveAsTable(sparkTableName(r))
+      val t = physical(r).getOrElse(throw noTable(r))
+      val dir = new HPath(t.location)
+      val files = fs.listStatus(dir).toSeq.map(_.getPath)
+        .filter(p => !p.getName.startsWith("_") && !p.getName.startsWith(".")).map(_.toString).sorted
+      Version(queryId, dirKey(dir), files, t.schema, System.currentTimeMillis())
     }
+
+  def readVersion(v: Version): DataFrame =
+    if (v.files.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[Row], v.schema)
+    else spark.read.schema(v.schema).parquet(v.files: _*)
+
+  /** Register a source of versions that must outlive the table's current
+    * directory; every [[sweep]] consults it. */
+  def holdVersions(held: () => Iterable[Version]): Unit = holders.add(held)
+
+  /** Delete every version directory this catalog wrote that is neither a
+    * table's current location nor held by a registered holder. */
+  def sweep(): Unit = swapLock.synchronized {
+    val current = databases.keySet.asScala.toSeq
+      .flatMap(db => scala.util.Try(sessionCatalog.listTables(db)).getOrElse(Nil))
+      .filter(_.database.isDefined)
+      .flatMap(t => scala.util.Try(sessionCatalog.getTableMetadata(t)).toOption)
+      .flatMap(_.storage.locationUri).map(u => dirKey(new HPath(u)))
+    val live = current.toSet ++ holders.asScala.flatMap(_.apply()).map(_.dir)
+    ownedDirs.asScala.filterNot(live).toSeq.foreach { d =>
+      fs.delete(new HPath(d), true)
+      ownedDirs.remove(d)
+    }
+  }
+
+  /** Write `df` (nothing, for an empty table) into a fresh directory under
+    * the table's root, then point the table there: a metadata-only swap,
+    * so readers see the old version or the new one, never a half-written
+    * one. */
+  private def commit(r: TableNaming.Ref, df: Option[DataFrame], schema: StructType,
+      clusterKey: Option[String]): Unit = lockFor(r).synchronized {
+    val cur = physical(r)
+    if (cur.isEmpty) createSchema(r.database, r.schema, ifNotExists = true)
+    val root = cur.map(t => new HPath(t.location).getParent)
+      .getOrElse(new HPath(tablesRoot, s"${r.database}/${r.schema}_${r.table}"))
+    val dir = new HPath(root, s"v-${java.util.UUID.randomUUID()}")
+    val bucketSpec = clusterKey.map(k => BucketSpec(ClusterBuckets, Seq(k), Seq(k)))
+    try {
+      df.map(_.select(schema.map(f => col(s"`${f.name}`").cast(f.dataType).as(f.name)): _*)) match {
+        case Some(d) if clusterKey.isDefined =>
+          // Spark writes bucketed files only through a table: a scratch
+          // external table at `dir`, dropped (files kept) once written
+          val scratch = s"`default`.`graft_w_${java.util.UUID.randomUUID().toString.replace("-", "")}`"
+          try d.write.format("parquet").bucketBy(ClusterBuckets, clusterKey.get).sortBy(clusterKey.get)
+            .option("path", dir.toString).saveAsTable(scratch)
+          finally spark.sql(s"DROP TABLE IF EXISTS $scratch")
+        case Some(d) => d.write.parquet(dir.toString)
+        case None => fs.mkdirs(dir)
+      }
+      swapLock.synchronized {
+        cur match {
+          case Some(t) =>
+            sessionCatalog.alterTable(t.copy(schema = schema, bucketSpec = bucketSpec,
+              storage = t.storage.copy(locationUri = Some(dir.toUri))))
+            sessionCatalog.invalidateCachedTable(ident(r))
+          case None =>
+            sessionCatalog.createTable(CatalogTable(ident(r), CatalogTableType.EXTERNAL,
+              CatalogStorageFormat.empty.copy(locationUri = Some(dir.toUri)),
+              schema, Some("parquet"), bucketSpec = bucketSpec), ignoreIfExists = false)
+        }
+        ownedDirs.add(dirKey(dir))
+      }
+    } catch { case t: Throwable => fs.delete(dir, true); throw t }
+    sweep()
+  }
 
   def setTableComment(r: TableNaming.Ref, comment: String): Unit =
     Option(tables.get(tKey(r))).foreach(_.comment = comment)
@@ -211,9 +297,7 @@ final class Catalog(val spark: SparkSession) {
     * the caller's ALTER TABLE RENAME; metadata moves here). */
   def renameTable(from: TableNaming.Ref, to: TableNaming.Ref): Unit =
     lockFor(from).synchronized {
-      val m = Option(tables.remove(tKey(from))).getOrElse(
-        throw SnowflakeError.notFound(
-          s"table ${from.database}.${from.schema}.${from.table} does not exist"))
+      val m = Option(tables.remove(tKey(from))).getOrElse(throw noTable(from))
       if (tables.containsKey(tKey(to))) {
         tables.put(tKey(from), m) // restore — rename refused
         throw SnowflakeError.alreadyExists(
@@ -227,7 +311,6 @@ final class Catalog(val spark: SparkSession) {
     * DROP/REPLACE restores the parquet AND the catalog entry, preserving
     * the cluster key so the restoring write re-buckets identically). */
   def restoreMeta(m: TableMeta): Unit = {
-    createDatabase(m.database)
     createSchema(m.database, m.schema, ifNotExists = true)
     tables.put(s"${m.database}.${m.schema}.${m.table}", m)
   }
@@ -249,12 +332,6 @@ final class Catalog(val spark: SparkSession) {
 
   def listFileFormats(db: String): Seq[FileFormatMeta] =
     fileFormats.values.asScala.filter(_.database == up(db)).toSeq.sortBy(_.name)
-
-  private def deleteRecursively(p: Path): Unit = {
-    val s = Files.walk(p)
-    try s.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-    finally s.close()
-  }
 }
 
 object Catalog {
@@ -269,6 +346,11 @@ object Catalog {
       var comment: String = "",
       createdOn: Long = System.currentTimeMillis(),
       clusterKey: Option[String] = None)
+
+  /** One immutable state of a table: its parquet files (all in `dir`) and
+    * schema, tagged with the statement that produced it. */
+  final case class Version(queryId: String, dir: String, files: Seq[String],
+      schema: StructType, atMillis: Long)
 
   final case class SchemaMeta(database: String, name: String,
       createdOn: Long = System.currentTimeMillis())

@@ -106,8 +106,8 @@ final class Executor(
     sessionParams.synchronized { sessionParams.remove(sessionId); () }
     lastQueryIds.remove(sessionId)
     // an open transaction dies with its session: roll it back (Snowflake's
-    // session-end contract) so snapshot temp dirs are freed, not leaked
-    Option(transactions.remove(sessionId)).foreach(rollbackTxn)
+    // session-end contract) so the versions it holds are released
+    rollback(sessionId)
     ()
   }
 
@@ -125,67 +125,42 @@ final class Executor(
     ()
   }
 
-  /** Streams on tables (CDC): name -> (source table, baseline snapshot).
+  /** Streams on tables (CDC): name -> (source table, baseline version).
     * A stream's content is the row-level delta between the source's
     * current state and the baseline; consuming the stream in a DML
-    * statement advances the baseline to the current state — Snowflake's
+    * statement advances the baseline to the current version — Snowflake's
     * stream contract, computed with Spark set operations instead of
     * offset bookkeeping. */
   private final case class StreamMeta(name: String,
       @volatile var table: TableNaming.Ref,
-      @volatile var baseline: java.nio.file.Path, appendOnly: Boolean = false,
+      @volatile var baseline: Catalog.Version, appendOnly: Boolean = false,
       @volatile var stale: Boolean = false)
   private val streams = new ConcurrentHashMap[String, StreamMeta]()
 
-  /** Time Travel: per-table ring of content versions, one recorded after
-    * each write statement (queryId, snapshot path, wall time). AT/BEFORE
-    * clauses resolve against this ring. Snowflake snapshots metadata
-    * zero-copy; the emulator copies parquet — a production port would
-    * record file manifests instead. Bounded at 8 versions per table. */
-  private final case class TableVersion(queryId: String,
-      path: java.nio.file.Path, atMillis: Long)
+  /** Time Travel: per-table ring of the versions recorded after each write
+    * statement. AT/BEFORE clauses resolve against this ring. Like
+    * Snowflake's, a version is metadata (a file list), not a copy. Bounded
+    * at 8 versions per table. */
   private val tableVersions =
-    new ConcurrentHashMap[String, java.util.ArrayDeque[TableVersion]]()
+    new ConcurrentHashMap[String, java.util.ArrayDeque[Catalog.Version]]()
   private val MaxVersionsPerTable = 8
 
   private def tableKey(r: TableNaming.Ref) =
     s"${r.database}.${r.schema}.${r.table}"
 
-  /** Tables above this on-disk size are not versioned (the snapshot would
-    * double every DML's write cost); AT/BEFORE then reports time travel
-    * unavailable — the honest trade-off for a copying emulator. */
-  private val TimeTravelMaxBytes: Long =
-    Dials.long("graft.timeTravelMaxBytes")
-      .getOrElse(1024L * 1024 * 1024)
-
-  /** Streams must snapshot their source as the CDC baseline; above this
-    * size the copy is refused (CREATE STREAM errors; a later advance past
-    * the cap marks the stream stale) instead of silently doubling storage
-    * per consumed DML — the same honest trade-off as time travel. */
-  private val StreamSnapshotMaxBytes: Long =
-    Dials.long("graft.streamSnapshotMaxBytes")
-      .getOrElse(8L * 1024 * 1024 * 1024)
-
-  /** On-disk bytes of a table — fs-metadata only, no data scan. */
-  private def tableBytes(ref: TableNaming.Ref): Long =
-    catalog.tableDf(ref).inputFiles.map(f =>
-      new java.io.File(new java.net.URI(f).getPath).length()).sum
-
-  /** Snapshot a table's current content as the post-state of `queryId`. */
-  private def recordVersion(ref: TableNaming.Ref, queryId: String): Unit =
+  /** Record a table's current version as the post-state of `queryId`; a
+    * transaction remembers it so ROLLBACK can take it back out. */
+  private def recordVersion(ctx: Context, ref: TableNaming.Ref, queryId: String): Unit =
     if (catalog.tableExists(ref)) {
-      val df = catalog.tableDf(ref)
-      val bytes = tableBytes(ref)
-      if (bytes <= TimeTravelMaxBytes) {
-        val tmp = Files.createTempDirectory("graft_tt")
-        df.write.mode("overwrite").parquet(tmp.toString)
-        val ring = tableVersions.computeIfAbsent(tableKey(ref),
-          _ => new java.util.ArrayDeque[TableVersion]())
-        ring.synchronized {
-          ring.addLast(TableVersion(queryId, tmp, System.currentTimeMillis()))
-          while (ring.size() > MaxVersionsPerTable) deleteDir(ring.removeFirst().path)
-        }
+      val v = catalog.version(ref, queryId)
+      val ring = tableVersions.computeIfAbsent(tableKey(ref),
+        _ => new java.util.ArrayDeque[Catalog.Version]())
+      ring.synchronized {
+        ring.addLast(v)
+        while (ring.size() > MaxVersionsPerTable) ring.removeFirst()
       }
+      Option(transactions.get(ctx.sessionId)).foreach(_.recorded.add(v))
+      catalog.sweep()
     }
 
   /** Identity bookkeeping when a table is dropped or replaced: streams on
@@ -195,11 +170,7 @@ final class Executor(
     * the old table's versions through AT/BEFORE. */
   private def invalidateTableIdentity(ref: TableNaming.Ref): Unit = {
     streams.asScala.values.foreach(sm => if (sm.table == ref) sm.stale = true)
-    Option(tableVersions.remove(tableKey(ref))).foreach { ring =>
-      ring.synchronized {
-        while (!ring.isEmpty) deleteDir(ring.removeFirst().path)
-      }
-    }
+    tableVersions.remove(tableKey(ref))
   }
 
   /** Snowflake tracks tables by id, not name: ALTER TABLE RENAME carries
@@ -212,15 +183,23 @@ final class Executor(
   }
 
   /** Drop-retention for UNDROP TABLE: the last 20 dropped tables' metadata
-    * and a parquet snapshot of their content at drop time. */
+    * and their version at drop time. */
   private val droppedTables =
-    new java.util.LinkedHashMap[String, (Catalog.TableMeta, java.nio.file.Path)](
+    new java.util.LinkedHashMap[String, (Catalog.TableMeta, Catalog.Version)](
       16, 0.75f, false) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[String, (Catalog.TableMeta, java.nio.file.Path)]) = {
-        if (size() > 20) { deleteDir(e.getValue._2); true } else false
-      }
+          e: java.util.Map.Entry[String, (Catalog.TableMeta, Catalog.Version)]) =
+        size() > 20
     }
+
+  /** Time-travel views per statement, dropped when the statement ends. */
+  private val timeTravelViews = new ConcurrentHashMap[String, Seq[String]]()
+
+  catalog.holdVersions(() =>
+    tableVersions.values.asScala.toSeq.flatMap(r => r.synchronized(r.asScala.toList)) ++
+      transactions.values.asScala.flatMap(_.snapshots.values.asScala.map(_._2)) ++
+      streams.values.asScala.map(_.baseline) ++
+      droppedTables.synchronized(droppedTables.values.asScala.map(_._2).toList))
 
   // ------------------------------------------------------------------
   // entry point
@@ -251,7 +230,8 @@ final class Executor(
         val err = SnowflakeError.fromThrowable(t)
         history.failure(queryId, bound, err.getMessage, t0)
         throw err
-    }
+    } finally
+      Option(timeTravelViews.remove(queryId)).foreach(_.foreach(spark.catalog.dropTempView))
   }
 
   private def route(ctx: Context, sql: String, queryId: String): Result = {
@@ -296,7 +276,7 @@ final class Executor(
     val u = bare.trim.toUpperCase(java.util.Locale.ROOT)
     if (u.startsWith("SHOW")) return show(ctx, bare, queryId)
     if (u.startsWith("DESC")) return describe(ctx, bare, queryId)
-    collectResult(fullQueryDf(ctx, bare), queryId, Classifier.StatementTypeSelect)
+    collectResult(fullQueryDf(ctx, bare, queryId), queryId, Classifier.StatementTypeSelect)
   }
 
   /** The full SELECT rewrite chain ending in a DataFrame — shared by
@@ -304,10 +284,10 @@ final class Executor(
     * scalar expression, including subqueries, through the same path a
     * SELECT takes). [[queryDf]] below is the lighter streams+naming-only
     * chain used by MERGE USING subqueries. */
-  private def fullQueryDf(ctx: Context, bare: String): DataFrame = {
+  private def fullQueryDf(ctx: Context, bare: String, queryId: String): DataFrame = {
     val withHistory = rewriteTopSample(
       rewriteQueryHistory(rewriteJsonPath(sessionContextFns(ctx,
-        rewriteTimeTravel(ctx, rewriteStreams(ctx, rewriteGenerator(
+        rewriteTimeTravel(ctx, queryId, rewriteStreams(ctx, rewriteGenerator(
           rewriteResultScan(ctx, rewritePipelineTable(ctx, bare)))))))))
     val rewritten = TableNaming.rewrite(rewriteFlatten(rewriteSplitToTable(rewriteQualify(withHistory))),
       ctx.database, ctx.schema)
@@ -488,8 +468,9 @@ final class Executor(
     * version immediately preceding it; `AT(OFFSET => -n)` the newest
     * version at least n seconds old. Resolved against the bounded
     * version ring and served through a temp view the name rewriter
-    * leaves alone. */
-  private def rewriteTimeTravel(ctx: Context, sql: String): String = {
+    * leaves alone, named after the statement so concurrent statements
+    * never share one; [[execute]] drops it when the statement ends. */
+  private def rewriteTimeTravel(ctx: Context, queryId: String, sql: String): String = {
     val upper = sql.toUpperCase(java.util.Locale.ROOT)
     if (!upper.contains(" AT") && !upper.contains("BEFORE")) return sql
     var n = 0
@@ -501,47 +482,38 @@ final class Executor(
       val ring = Option(tableVersions.get(tableKey(ref))).getOrElse(
         throw SnowflakeError.compilation(
           s"Time travel data is not available for table ${ref.table}"))
-      val versions = ring.synchronized {
-        scala.jdk.CollectionConverters.IteratorHasAsScala(ring.iterator).asScala.toVector
-      }
-      val chosen = (mode, kind) match {
-        case (_, "STATEMENT") =>
+      val versions = ring.synchronized(ring.asScala.toVector)
+      def newestAt(cutoffMillis: Long) = versions.reverseIterator.find(_.atMillis <= cutoffMillis)
+      val chosen = kind match {
+        case "STATEMENT" =>
           val idx = versions.indexWhere(_.queryId == arg)
           if (idx < 0) throw SnowflakeError.compilation(
             s"Time travel data is not available for statement $arg")
           if (mode == "AT") Some(versions(idx))
           else if (idx == 0) None else Some(versions(idx - 1))
-        case (_, "OFFSET") =>
-          val cutoff = System.currentTimeMillis() + arg.toLong * 1000L
-          versions.reverseIterator.find(_.atMillis <= cutoff)
-        case (_, "TIMESTAMP") =>
+        case "OFFSET" => newestAt(System.currentTimeMillis() + arg.toLong * 1000L)
+        case "TIMESTAMP" =>
           // Lenient ISO-ish parse: 'YYYY-MM-DD[ HH:MM:SS[.fff]][offset]'.
           // Offset forms keep their zone; zone-less forms are session-UTC;
           // date-only means midnight UTC. A malformed value is a
           // compilation error, not a raw DateTimeParseException.
           val t = arg.trim.replace(" ", "T")
-          val cutoff =
-            try java.time.OffsetDateTime.parse(t).toInstant.toEpochMilli
-            catch { case _: java.time.format.DateTimeParseException =>
-              try java.time.LocalDateTime.parse(t)
-                .toInstant(java.time.ZoneOffset.UTC).toEpochMilli
-              catch { case _: java.time.format.DateTimeParseException =>
-                try java.time.LocalDate.parse(t).atStartOfDay
-                  .toInstant(java.time.ZoneOffset.UTC).toEpochMilli
-                catch { case _: java.time.format.DateTimeParseException =>
-                  throw SnowflakeError.compilation(
-                    s"Invalid timestamp '$arg' in AT/BEFORE clause")
-                }
-              }
-            }
-          versions.reverseIterator.find(_.atMillis <= cutoff)
+          val utc = java.time.ZoneOffset.UTC
+          newestAt(Iterator[String => java.time.Instant](
+            java.time.OffsetDateTime.parse(_).toInstant,
+            java.time.LocalDateTime.parse(_).toInstant(utc),
+            java.time.LocalDate.parse(_).atStartOfDay.toInstant(utc))
+            .flatMap(parse => scala.util.Try(parse(t)).toOption).nextOption()
+            .getOrElse(throw SnowflakeError.compilation(
+              s"Invalid timestamp '$arg' in AT/BEFORE clause")).toEpochMilli)
         case _ => None
       }
       val v = chosen.getOrElse(throw SnowflakeError.compilation(
         s"Time travel data is not available for table ${ref.table} at the requested point"))
       n += 1
-      val view = s"graft_tt_$n"
-      spark.read.parquet(v.path.toString).createOrReplaceTempView(view)
+      val view = s"graft_tt_${queryId.replaceAll("\\W", "_")}_$n"
+      catalog.readVersion(v).createOrReplaceTempView(view)
+      timeTravelViews.merge(queryId, Seq(view), _ ++ _)
       java.util.regex.Matcher.quoteReplacement(s"`$view`")
     })
   }
@@ -567,7 +539,7 @@ final class Executor(
               s"Stream ${sm.name} is stale: source table " +
                 s"${sm.table.table} was dropped or replaced")
           val cur = catalog.tableDf(sm.table)
-          val base = spark.read.parquet(sm.baseline.toString)
+          val base = catalog.readVersion(sm.baseline)
           val inserted = cur.exceptAll(base)
             .withColumn("METADATA$ACTION", org.apache.spark.sql.functions.lit("INSERT"))
           // APPEND_ONLY streams surface inserts only (cheaper: one
@@ -598,27 +570,17 @@ final class Executor(
   }
 
   /** After a DML that read from streams: advance each referenced stream's
-    * baseline to the source's current state (Snowflake consumes streams
+    * baseline to the source's current version (Snowflake consumes streams
     * transactionally on DML; the emulator advances on statement success). */
-  private def advanceConsumedStreams(ctx: Context, sql: String): Unit =
+  private def advanceConsumedStreams(ctx: Context, sql: String): Unit = {
     streams.asScala.foreach { case (key, sm) =>
       if (key.startsWith(s"${norm(ctx.database)}.${norm(ctx.schema)}.") &&
         !sm.stale && catalog.tableExists(sm.table) &&
-        mentionsOutsideQuotes(sql, streamNameRe(sm.name))) {
-        if (tableBytes(sm.table) > StreamSnapshotMaxBytes) {
-          // the DML already succeeded; refusing the copy must not fail it.
-          // The stream can no longer track its source within the cap, so
-          // it goes stale (subsequent reads raise the stale error).
-          sm.stale = true
-        } else {
-          val tmp = Files.createTempDirectory("graft_stream")
-          catalog.tableDf(sm.table).write.mode("overwrite").parquet(tmp.toString)
-          val old = sm.baseline
-          sm.baseline = tmp
-          deleteDir(old)
-        }
-      }
+        mentionsOutsideQuotes(sql, streamNameRe(sm.name)))
+        sm.baseline = catalog.version(sm.table)
     }
+    catalog.sweep()
+  }
 
   private def norm(s: String): String = s.trim.toUpperCase(java.util.Locale.ROOT)
 
@@ -1169,7 +1131,7 @@ final class Executor(
     val sel = exprs.zipWithIndex
       .map { case (e, i) => s"($e) AS __graft_v$i" }
       .mkString("SELECT ", ", ", "")
-    val df = fullQueryDf(ctx, sel)
+    val df = fullQueryDf(ctx, sel, queryId)
     val row = df.collect().headOption.getOrElse(
       throw SnowflakeError.compilation("SET expression produced no row"))
     val vars = varsOf(ctx.sessionId)
@@ -1337,7 +1299,6 @@ final class Executor(
         status(queryId, s"Schema ${sc.toUpperCase} successfully created.")
       case createViewRe(name, select) =>
         val ref = TableNaming.parse(name, ctx.database, ctx.schema)
-        catalog.createDatabase(ref.database)
         catalog.createSchema(ref.database, ref.schema, ifNotExists = true)
         val rewritten = TableNaming.rewrite(
           rewriteFlatten(rewriteSplitToTable(select)), ctx.database, ctx.schema)
@@ -1360,16 +1321,8 @@ final class Executor(
           throw SnowflakeError.notFound(s"table $tableName does not exist")
         val appendOnly = appendOpt != null &&
           appendOpt.toUpperCase(java.util.Locale.ROOT).contains("TRUE")
-        if (tableBytes(srcRef) > StreamSnapshotMaxBytes)
-          throw SnowflakeError.compilation(
-            s"Cannot create stream on $tableName: source exceeds the " +
-              s"$StreamSnapshotMaxBytes-byte baseline snapshot cap " +
-              "(-Dgraft.streamSnapshotMaxBytes to raise)")
-        val tmp = Files.createTempDirectory("graft_stream")
-        catalog.tableDf(srcRef).write.mode("overwrite").parquet(tmp.toString)
-        val old = streams.put(s"${ref.database}.${ref.schema}.${ref.table}",
-          StreamMeta(ref.table, srcRef, tmp, appendOnly))
-        if (old != null) deleteDir(old.baseline)
+        streams.put(s"${ref.database}.${ref.schema}.${ref.table}",
+          StreamMeta(ref.table, srcRef, catalog.version(srcRef), appendOnly))
         status(queryId, s"Stream ${ref.table} successfully created.")
       case createFileFormatRe(name, optionsText) =>
         val tpe = """(?is)TYPE\s*=\s*'?(\w+)'?""".r
@@ -1377,10 +1330,9 @@ final class Executor(
         catalog.createFileFormat(ctx.database, ctx.schema, name, tpe, optionsText)
         status(queryId, s"File format ${name.toUpperCase} successfully created.")
       // CREATE TABLE ... CLONE: schema + cluster key + DATA snapshot.
-      // Snowflake's clone is zero-copy metadata; the emulator's
-      // equivalent is one parquet copy at clone time — same user-visible
-      // semantics (independent table, point-in-time content), the
-      // storage trick is out of scope for a single-node emulator.
+      // Snowflake's clone is zero-copy metadata; the emulator copies the
+      // parquet once at clone time, because a table's current directory
+      // takes its appends and is never shared between two tables.
       case createCloneRe(orReplace, name, srcName) =>
         val ref = TableNaming.parse(name, ctx.database, ctx.schema)
         val srcRef = TableNaming.parse(srcName, ctx.database, ctx.schema)
@@ -1392,8 +1344,8 @@ final class Executor(
         if (catalog.tableExists(ref)) invalidateTableIdentity(ref)
         catalog.createTable(ref, src.columns, orReplace = true,
           clusterKey = src.clusterKey)
-        catalog.overwriteTable(ref, catalog.tableDf(srcRef))
-        recordVersion(ref, queryId)
+        catalog.overwriteTable(ref, catalog.tableDf(srcRef), keepSchema = false)
+        recordVersion(ctx, ref, queryId)
         status(queryId, s"Table ${ref.table} successfully created.")
       case createLikeRe(name, srcName) =>
         // CREATE TABLE ... LIKE: clone columns + cluster key, no data
@@ -1414,14 +1366,11 @@ final class Executor(
           throw SnowflakeError.alreadyExists(s"table ${ref.table} already exists")
         beforeWrite(ctx, ref, created = !catalog.tableExists(ref))
         if (catalog.tableExists(ref)) invalidateTableIdentity(ref)
-        val df = queryDf(ctx, select)
-        catalog.createDatabase(ref.database)
-        catalog.createSchema(ref.database, ref.schema, ifNotExists = true)
-        catalog.overwriteTable(ref, df)
+        catalog.overwriteTable(ref, queryDf(ctx, select), keepSchema = false)
         catalog.registerExisting(ref)
-        recordVersion(ref, queryId)
+        recordVersion(ctx, ref, queryId)
         // after the write materialized: a stream read by the CTAS is
-        // consumed (advancing earlier would delete the baseline the
+        // consumed (advancing earlier would release the baseline the
         // not-yet-executed plan still reads)
         advanceConsumedStreams(ctx, select)
         status(queryId, s"Table ${ref.table} successfully created.")
@@ -1435,7 +1384,7 @@ final class Executor(
         catalog.createTable(ref, parseColumnDefs(colDefs),
           orReplace = orReplace != null, ifNotExists = ifNotExists != null,
           clusterKey = clusterKey)
-        recordVersion(ref, queryId)
+        recordVersion(ctx, ref, queryId)
         status(queryId, s"Table ${ref.table} successfully created.")
       case other =>
         throw SnowflakeError.compilation(s"unsupported CREATE statement: $other")
@@ -1491,23 +1440,19 @@ final class Executor(
   private val undropRe = """(?is)UNDROP\s+TABLE\s+(\S+?);?\s*$""".r
 
   /** Snowflake UNDROP TABLE: restore the most recent drop of that name
-    * from the retention snapshot (content AND metadata, cluster key
+    * from its retained version (content AND metadata, cluster key
     * included, so the restoring write re-buckets identically). */
   private def undrop(ctx: Context, sql: String, queryId: String): Result =
     sql.trim match {
       case undropRe(name) =>
         val ref = TableNaming.parse(name, ctx.database, ctx.schema)
-        val key = s"${ref.database}.${ref.schema}.${ref.table}"
-        val entry = droppedTables.synchronized(Option(droppedTables.remove(key)))
-        val (meta, tmp) = entry.getOrElse(throw SnowflakeError.notFound(
-          s"table $name does not exist or was not recently dropped"))
-        if (catalog.tableExists(ref)) {
-          droppedTables.synchronized(droppedTables.put(key, (meta, tmp)))
+        if (catalog.tableExists(ref))
           throw SnowflakeError.alreadyExists(s"table ${ref.table} already exists")
-        }
+        val (meta, v) = droppedTables.synchronized(Option(droppedTables.remove(tableKey(ref))))
+          .getOrElse(throw SnowflakeError.notFound(
+            s"table $name does not exist or was not recently dropped"))
         catalog.restoreMeta(meta)
-        catalog.overwriteTable(ref, spark.read.parquet(tmp.toString))
-        deleteDir(tmp)
+        catalog.overwriteTable(ref, catalog.readVersion(v))
         status(queryId, s"Table ${ref.table} successfully restored.")
       case _ =>
         throw SnowflakeError.compilation(s"unsupported UNDROP statement: $sql")
@@ -1531,21 +1476,11 @@ final class Executor(
         val ref = TableNaming.parse(name, ctx.database, ctx.schema)
         if (catalog.tableExists(ref)) {
           beforeWrite(ctx, ref, created = false)
-          // drop retention for UNDROP: snapshot content + metadata before
+          // drop retention for UNDROP: hold the version + metadata past
           // the physical drop (Snowflake Time Travel's drop window; the
           // emulator keeps the last few drops instead of a 24 h clock)
-          // same cap as time travel: an over-sized table is dropped
-          // without an UNDROP snapshot (UNDROP then reports not-found)
-          // rather than silently duplicating it on disk
-          if (tableBytes(ref) <= TimeTravelMaxBytes) {
-            val meta = catalog.getTable(ref).get
-            val tmp = Files.createTempDirectory("graft_undrop")
-            catalog.tableDf(ref).write.mode("overwrite").parquet(tmp.toString)
-            droppedTables.synchronized {
-              droppedTables.put(s"${ref.database}.${ref.schema}.${ref.table}",
-                (meta, tmp))
-            }
-          }
+          val retained = (catalog.getTable(ref).get, catalog.version(ref))
+          droppedTables.synchronized(droppedTables.put(tableKey(ref), retained))
           invalidateTableIdentity(ref)
         }
         catalog.dropTable(ref, ifExists)
@@ -1555,7 +1490,7 @@ final class Executor(
         val removed = streams.remove(s"${ref.database}.${ref.schema}.${ref.table}")
         if (removed == null && !ifExists)
           throw SnowflakeError.notFound(s"stream $name does not exist")
-        if (removed != null) deleteDir(removed.baseline)
+        catalog.sweep()
       case "STAGE" => stages.dropStage(name.toUpperCase(java.util.Locale.ROOT))
       case "FILE FORMAT" =>
         catalog.dropFileFormat(ctx.database, ctx.schema, name, ifExists)
@@ -1635,8 +1570,8 @@ final class Executor(
         status(queryId, "Statement executed successfully.")
       // DROP/RENAME COLUMN: Spark's v1 parquet tables reject both, while
       // the reference gets real drops from DuckDB pass-through
-      // (`pkg/query/executor.go:358-377`). Same copy-on-write shape as
-      // UPDATE/DELETE: one scan + one write of the projected table, no
+      // (`pkg/query/executor.go:358-377`). Same shape as UPDATE/DELETE:
+      // one scan + one write of the projected table as a new version, no
       // shuffle — embarrassingly parallel at any scale.
       case alterDropColRe(name, colsRaw)
           if !colsRaw.trim.toUpperCase(java.util.Locale.ROOT).startsWith("CLUSTERING") =>
@@ -1657,7 +1592,8 @@ final class Executor(
         beforeWrite(ctx, ref, created = false)
         catalog.lockFor(ref).synchronized {
           catalog.overwriteTable(ref,
-            df.select(remaining.map(org.apache.spark.sql.functions.col).toSeq: _*))
+            df.select(remaining.map(org.apache.spark.sql.functions.col).toSeq: _*),
+            keepSchema = false)
           catalog.registerExisting(ref)
         }
         status(queryId, "Statement executed successfully.")
@@ -1669,7 +1605,7 @@ final class Executor(
         if (!catalog.tableExists(rf))
           throw SnowflakeError.notFound(
             s"table ${rf.database}.${rf.schema}.${rf.table} does not exist")
-        // txn posture: snapshot the old name, mark the new one created —
+        // txn posture: hold the old name's version, mark the new one created —
         // ROLLBACK then restores the old table and drops the renamed one
         beforeWrite(ctx, rf, created = false)
         beforeWrite(ctx, rt, created = true)
@@ -1694,7 +1630,7 @@ final class Executor(
             "cannot rename a clustering key column; drop the clustering key first")
         beforeWrite(ctx, ref, created = false)
         catalog.lockFor(ref).synchronized {
-          catalog.overwriteTable(ref, df.withColumnRenamed(from, to))
+          catalog.overwriteTable(ref, df.withColumnRenamed(from, to), keepSchema = false)
           catalog.registerExisting(ref)
         }
         status(queryId, "Statement executed successfully.")
@@ -1745,19 +1681,13 @@ final class Executor(
           // rows-affected without scanning the target (VERDICT r1 #3):
           // VALUES -> tuple count from the text, INSERT..SELECT -> count the
           // source plan once; count-delta full scans only as last resort
-          val n = insertedRowCount(ctx, streamSql)
-          n match {
-            case Some(rows) =>
-              spark.sql(TableNaming.rewrite(streamSql, ctx.database, ctx.schema))
-              dmlResult(queryId, "number of rows inserted", rows)
-            case None =>
-              val before = catalog.tableDf(ref).count()
-              spark.sql(TableNaming.rewrite(streamSql, ctx.database, ctx.schema))
-              val after = catalog.tableDf(ref).count()
-              dmlResult(queryId, "number of rows inserted", after - before)
-          }
+          val known = insertedRowCount(ctx, streamSql)
+          val before = if (known.isEmpty) catalog.tableDf(ref).count() else 0L
+          spark.sql(TableNaming.rewrite(streamSql, ctx.database, ctx.schema))
+          dmlResult(queryId, "number of rows inserted",
+            known.getOrElse(catalog.tableDf(ref).count() - before))
         }
-        recordVersion(ref, queryId)
+        recordVersion(ctx, ref, queryId)
         if (streamSql ne sql) advanceConsumedStreams(ctx, sql)
         r
       case updateRe(name, sets, where) =>
@@ -1777,7 +1707,7 @@ final class Executor(
         }.toMap
         val affected = MutableOps.affectedCount(df, cond)
         catalog.overwriteTable(ref, MutableOps.update(df, cond, setMap))
-        recordVersion(ref, queryId)
+        recordVersion(ctx, ref, queryId)
         dmlResult(queryId, "number of rows updated", affected)
       case deleteRe(name, where) =>
         val ref = TableNaming.parse(name, ctx.database, ctx.schema)
@@ -1786,15 +1716,13 @@ final class Executor(
         val cond = Option(where).map(expr).getOrElse(lit(true))
         val affected = MutableOps.affectedCount(df, cond)
         catalog.overwriteTable(ref, MutableOps.delete(df, cond))
-        recordVersion(ref, queryId)
+        recordVersion(ctx, ref, queryId)
         dmlResult(queryId, "number of rows deleted", affected)
       case truncateRe(name) =>
         val ref = TableNaming.parse(name, ctx.database, ctx.schema)
         beforeWrite(ctx, ref, created = false)
-        val df = catalog.tableDf(ref)
-        val affected = df.count()
-        catalog.overwriteTable(ref, df.limit(0))
-        recordVersion(ref, queryId)
+        catalog.overwriteTable(ref, catalog.tableDf(ref).limit(0))
+        recordVersion(ctx, ref, queryId)
         status(queryId, "Statement executed successfully.")
       case other =>
         // unknown statements pass through, the reference's contract
@@ -1870,7 +1798,7 @@ final class Executor(
         if (sp < 0) (restTrim, "") else (restTrim.substring(0, sp), restTrim.substring(sp))
       }
     val df =
-      if (restTrim.startsWith("(")) fullQueryDf(ctx, sourceText)
+      if (restTrim.startsWith("(")) fullQueryDf(ctx, sourceText, queryId)
       else catalog.tableDf(TableNaming.parse(sourceText, ctx.database, ctx.schema))
     val ffText = """(?is)FILE_FORMAT\s*=\s*\(([^)]*)\)""".r
       .findFirstMatchIn(tail).map(_.group(1)).getOrElse("")
@@ -1966,7 +1894,7 @@ final class Executor(
         Seq(Seq[Any](res.rowsLoaded, res.filesLoaded)), Classifier.StatementTypeDml)
     beforeWrite(ctx, stmt.target, created = false)
     catalog.appendToTable(stmt.target, df)
-    recordVersion(stmt.target, queryId)
+    recordVersion(ctx, stmt.target, queryId)
     localResult(queryId,
       Seq("file", "status", "rows_parsed", "rows_loaded", "errors_seen"),
       Seq(Seq[Any](s"@${stmt.stageName}/${stmt.stagePath}",
@@ -2050,7 +1978,7 @@ final class Executor(
           throw SnowflakeError.execution(e.getMessage)
       }
 
-    recordVersion(targetRef, queryId)
+    recordVersion(ctx, targetRef, queryId)
     // a MERGE that read from streams consumes them, exactly like other
     // stream-reading DML (Snowflake advances the offset transactionally
     // on DML success; the emulator advances after the successful write)
@@ -2066,70 +1994,60 @@ final class Executor(
 
   // ------------------------------------------------------------------
   // transactions (reference `executor.go:399-426`; Spark has none, so BEGIN
-  // snapshots tables on first write and ROLLBACK restores — SURVEY §7 hard
-  // part 2)
+  // holds each table's version before its first write and ROLLBACK
+  // restores it — SURVEY §7 hard part 2)
   // ------------------------------------------------------------------
 
   private final class Txn {
-    val snapshots = new ConcurrentHashMap[String, (TableNaming.Ref, java.nio.file.Path, Catalog.TableMeta)]()
-    val created = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val snapshots = new ConcurrentHashMap[String, (TableNaming.Ref, Catalog.Version, Catalog.TableMeta)]()
     val createdRefs = new ConcurrentHashMap[String, TableNaming.Ref]()
+    /** Versions this transaction put in the time-travel ring. */
+    val recorded = new java.util.concurrent.ConcurrentLinkedQueue[Catalog.Version]()
   }
 
-  private def key(r: TableNaming.Ref) = s"${r.database}.${r.schema}.${r.table}"
-
-  /** Snapshot a table before its first modification inside a transaction. */
+  /** Hold a table's version before its first modification inside a
+    * transaction. */
   private def beforeWrite(ctx: Context, ref: TableNaming.Ref, created: Boolean): Unit = {
     val txn = transactions.get(ctx.sessionId)
     if (txn == null) return
-    val k = key(ref)
-    if (created) {
-      txn.created.add(k)
-      txn.createdRefs.put(k, ref)
-    } else if (!txn.snapshots.containsKey(k) && !txn.created.contains(k)
-        && catalog.tableExists(ref)) {
-      val tmp = Files.createTempDirectory("graft_txn")
-      catalog.tableDf(ref).write.mode("overwrite").parquet(tmp.toString)
-      txn.snapshots.put(k, (ref, tmp, catalog.getTable(ref).get))
-    }
+    val k = tableKey(ref)
+    if (created) txn.createdRefs.put(k, ref)
+    else if (!txn.snapshots.containsKey(k) && !txn.createdRefs.containsKey(k)
+        && catalog.tableExists(ref))
+      txn.snapshots.put(k, (ref, catalog.version(ref), catalog.getTable(ref).get))
   }
 
   private def transaction(ctx: Context, sql: String, queryId: String): Result = {
-    if (Classifier.isBegin(sql)) {
-      transactions.putIfAbsent(ctx.sessionId, new Txn)
-      status(queryId, "Statement executed successfully.")
-    } else if (Classifier.isCommit(sql)) {
-      Option(transactions.remove(ctx.sessionId)).foreach { txn =>
-        txn.snapshots.values.asScala.foreach { case (_, tmp, _) => deleteDir(tmp) }
-      }
-      status(queryId, "Statement executed successfully.")
-    } else { // ROLLBACK
-      Option(transactions.remove(ctx.sessionId)).foreach(rollbackTxn)
-      status(queryId, "Statement executed successfully.")
-    }
+    if (Classifier.isBegin(sql)) transactions.putIfAbsent(ctx.sessionId, new Txn)
+    else if (Classifier.isCommit(sql)) transactions.remove(ctx.sessionId)
+    else rollback(ctx.sessionId)
+    catalog.sweep()
+    status(queryId, "Statement executed successfully.")
   }
 
-  private def rollbackTxn(txn: Txn): Unit = {
-    txn.snapshots.values.asScala.foreach { case (ref, tmp, meta) =>
-      // a DROP/REPLACE inside the txn removed the catalog entry;
-      // re-install the snapshotted meta first so the restoring write
-      // re-buckets with the original cluster key (ADVICE r1 #4)
-      catalog.restoreMeta(meta)
-      catalog.overwriteTable(ref, spark.read.parquet(tmp.toString))
-      deleteDir(tmp)
+  /** Restore each table from its held version (one rewrite), drop the
+    * tables the transaction created, and take its versions back out of
+    * the time-travel ring so AT/BEFORE never serves rolled-back rows. The
+    * transaction stays registered until the restores are written, so the
+    * versions it holds survive their sweeps. */
+  private def rollback(sessionId: String): Unit =
+    Option(transactions.get(sessionId)).foreach { txn =>
+      try {
+        tableVersions.values.asScala.foreach(ring =>
+          ring.synchronized(txn.recorded.asScala.foreach(ring.remove)))
+        txn.snapshots.values.asScala.foreach { case (ref, v, meta) =>
+          // a DROP/REPLACE inside the txn removed the catalog entry;
+          // re-install the held meta first so the restoring write
+          // re-buckets with the original cluster key (ADVICE r1 #4)
+          catalog.restoreMeta(meta)
+          catalog.overwriteTable(ref, catalog.readVersion(v), keepSchema = false)
+        }
+        txn.createdRefs.values.asScala.foreach(catalog.dropTable(_, ifExists = true))
+      } finally transactions.remove(sessionId)
     }
-    txn.createdRefs.values.asScala.foreach(r =>
-      catalog.dropTable(r, ifExists = true))
-  }
 
   def inTransaction(sessionId: String): Boolean =
     transactions.containsKey(sessionId)
-
-  private def deleteDir(p: java.nio.file.Path): Unit = {
-    val s = Files.walk(p)
-    try s.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-    finally s.close()
-  }
 
   // ------------------------------------------------------------------
   // stage listing / removal (Snowflake LIST/REMOVE statements; the
@@ -2140,28 +2058,26 @@ final class Executor(
   private val stageRefRe =
     """(?is)(?:LIST|LS|REMOVE|RM)\s+@([^\s/]+)(/\S*)?(?:\s+PATTERN\s*=\s*'([^']+)')?""".r
 
-  private def listStage(sql: String, queryId: String): Result = {
+  /** The stage a LIST/REMOVE names, and its files under the statement's
+    * path prefix that match its PATTERN. */
+  private def stageFiles(sql: String, verb: String) = {
     val m = stageRefRe.findFirstMatchIn(sql.trim).getOrElse(
-      throw SnowflakeError.compilation(s"invalid LIST statement: $sql"))
+      throw SnowflakeError.compilation(s"invalid $verb statement: $sql"))
     val stage = m.group(1).toUpperCase(java.util.Locale.ROOT)
     val prefix = Option(m.group(2)).map(_.stripPrefix("/")).getOrElse("")
     val pattern = Option(m.group(3))
-    val files = stages.list(stage)
-      .filter(f => f.relativePath.startsWith(prefix))
-      .filter(f => pattern.forall(p => f.relativePath.matches(p)))
+    (stage, stages.list(stage).filter(f =>
+      f.relativePath.startsWith(prefix) && pattern.forall(f.relativePath.matches)))
+  }
+
+  private def listStage(sql: String, queryId: String): Result = {
+    val (stage, files) = stageFiles(sql, "LIST")
     localResult(queryId, Seq("name", "size", "md5", "last_modified"),
       files.map(f => Seq[Any](s"$stage/${f.relativePath}", f.sizeBytes, null, null)))
   }
 
   private def removeStage(sql: String, queryId: String): Result = {
-    val m = stageRefRe.findFirstMatchIn(sql.trim).getOrElse(
-      throw SnowflakeError.compilation(s"invalid REMOVE statement: $sql"))
-    val stage = m.group(1).toUpperCase(java.util.Locale.ROOT)
-    val prefix = Option(m.group(2)).map(_.stripPrefix("/")).getOrElse("")
-    val pattern = Option(m.group(3))
-    val victims = stages.list(stage)
-      .filter(f => f.relativePath.startsWith(prefix))
-      .filter(f => pattern.forall(p => f.relativePath.matches(p)))
+    val (stage, victims) = stageFiles(sql, "REMOVE")
     victims.foreach(f => stages.remove(stage, f.relativePath))
     localResult(queryId, Seq("name", "result"),
       victims.map(f => Seq[Any](s"$stage/${f.relativePath}", "removed")))

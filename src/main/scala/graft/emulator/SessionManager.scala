@@ -126,7 +126,7 @@ final class SessionManager(ttlMillis: Long = 24L * 3600 * 1000) {
     Option(byToken.remove(token)).map { s =>
       byMaster.remove(s.masterToken)
       // close runs on whatever request thread noticed the expiry: a
-      // failing listener (e.g. a transaction rollback whose snapshot dir
+      // failing listener (e.g. a transaction rollback whose held version
       // was externally deleted) must neither fail that unrelated request
       // nor starve the remaining listeners
       closeListeners.forEach { f =>

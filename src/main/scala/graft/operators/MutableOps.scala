@@ -9,9 +9,9 @@ import org.apache.spark.sql.functions._
   * counts (reference `pkg/query/executor.go:298-356`). Parquet-backed Spark
   * tables have no in-place mutation, so the engine expresses both as pure
   * transformations — `when(cond, new).otherwise(old)` / `filter(!cond)` —
-  * that the table layer then writes back atomically (write temp, swap; see
-  * GraftTable). At scale this is one full scan + one write, embarrassingly
-  * parallel, with no shuffle at all.
+  * that the catalog writes once as a new table version and swaps in
+  * (`Catalog.overwriteTable`). At scale this is one full scan + one write,
+  * embarrassingly parallel, with no shuffle at all.
   */
 object MutableOps {
 

@@ -23,7 +23,7 @@ final class EmulatorServer(
     port: Int = 0) {
 
   private val mapper = new ObjectMapper()
-  private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+  private val server = EmulatorServer.httpServer(port)
   server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(8))
 
   // session variables / parameters / open transactions live in the
@@ -391,8 +391,9 @@ final class EmulatorServer(
     // handle, which never recurs): a transaction left open — by a
     // mid-batch failure aborting before COMMIT, or by a batch that simply
     // never commits — rolls back now, exactly Snowflake's end-of-session
-    // contract. This also frees the batch's session variables and the txn
-    // snapshot dirs instead of leaking them under an unreachable id.
+    // contract. This also frees the batch's session variables and the
+    // versions its transaction holds instead of leaking them under an
+    // unreachable id.
     // Token-bound: the state belongs to the v1 session and is released
     // when THAT session closes.
     if (boundToken.isEmpty) executor.releaseSessionState(parent.handle)
@@ -828,6 +829,18 @@ final class EmulatorServer(
 }
 
 object EmulatorServer {
+  // TCP_NODELAY on every connection, unless the user chose otherwise. The
+  // JDK's HttpServer writes response headers and body separately; with
+  // Nagle's algorithm on, the body waits for the client's delayed ACK
+  // (~40 ms per statement). Its ServerConfig reads the property once, when
+  // the first server is created; every server is created through this
+  // object, so the property is set before that.
+  if (!sys.props.contains("sun.net.httpserver.nodelay"))
+    sys.props("sun.net.httpserver.nodelay") = "true"
+
+  private def httpServer(port: Int): HttpServer =
+    HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+
   /** Wire up a complete emulator (session factory + managers + server). */
   def apply(spark: org.apache.spark.sql.SparkSession, port: Int = 0,
       stageRoot: java.nio.file.Path =

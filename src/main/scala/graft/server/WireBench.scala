@@ -23,7 +23,7 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
   *                  wire, the CI-smoke-shaped workload;
   *  - `dml`       — INSERT VALUES + point UPDATE + COUNT against a
   *                  server-side table: the stateful path (catalog,
-  *                  copy-on-write, history).
+  *                  table versions, history).
   *
   * Output: one JSON line (and `SPARK_GRAFT_BENCH_OUT`, default
   * `target/bench_wire.json`) with per-(wire, class) n/mean/p50/p95/p99 ms

@@ -1526,4 +1526,59 @@ class ExecutorSpec extends AnyFunSuite {
         s"phrase matches ($asPhrase) must be rarer than bag-of-words ($asTerms)")
     } finally exec("ALTER SESSION UNSET GRAFT_BM25_K")
   }
+
+  test("70 ROLLBACK takes the transaction's versions out of time travel") {
+    exec("CREATE TABLE rbtt_t (id INTEGER, v VARCHAR(10))")
+    exec("INSERT INTO rbtt_t VALUES (1, 'a')")
+    exec("BEGIN")
+    val upd = exec("UPDATE rbtt_t SET v = 'z' WHERE id = 1")
+    exec("INSERT INTO rbtt_t VALUES (2, 'b')")
+    exec("ROLLBACK")
+    val now = exec("SELECT id, v FROM rbtt_t AT(OFFSET => 0) ORDER BY id")
+    assert(now.rows == Seq(Seq(1, "a")), now.rows)
+    intercept[SnowflakeError] {
+      exec(s"SELECT * FROM rbtt_t AT(STATEMENT => '${upd.queryId}')")
+    }
+    // a committed transaction keeps its versions
+    exec("BEGIN")
+    val upd2 = exec("UPDATE rbtt_t SET v = 'y' WHERE id = 1")
+    exec("COMMIT")
+    val at = exec(s"SELECT v FROM rbtt_t AT(STATEMENT => '${upd2.queryId}')")
+    assert(at.rows == Seq(Seq("y")), at.rows)
+  }
+
+  test("71 concurrent time-travel reads in two sessions each see their own table") {
+    exec("CREATE TABLE ttc_a (k INTEGER)")
+    val qa = exec("INSERT INTO ttc_a VALUES (1)").queryId
+    exec("INSERT INTO ttc_a VALUES (100)")
+    exec("CREATE TABLE ttc_b (k INTEGER)")
+    val qb = exec("INSERT INTO ttc_b VALUES (2), (3)").queryId
+    exec("INSERT INTO ttc_b VALUES (200)")
+    val start = new java.util.concurrent.CountDownLatch(1)
+    def reader(session: String, table: String, q: String) = {
+      val c = Executor.Context(session, "TEST_DB", "PUBLIC")
+      java.util.concurrent.CompletableFuture.supplyAsync(() => {
+        start.await()
+        (1 to 40).map { _ =>
+          // three AT relations per statement: three views, a wide window
+          val r = executor.execute(c,
+            s"""SELECT (SELECT SUM(k) FROM $table AT(STATEMENT => '$q'))
+               |  + (SELECT SUM(k) FROM $table AT(STATEMENT => '$q'))
+               |  + (SELECT SUM(k) FROM $table AT(STATEMENT => '$q')) AS s""".stripMargin)
+          (r.rows.head.head.toString, r.queryId)
+        }
+      })
+    }
+    val a = reader("tt-sess-a", "ttc_a", qa)
+    val b = reader("tt-sess-b", "ttc_b", qb)
+    start.countDown()
+    val (sumsA, idsA) = a.get().unzip
+    val (sumsB, idsB) = b.get().unzip
+    assert(sumsA.distinct == Seq("3") && sumsB.distinct == Seq("15"),
+      s"$sumsA / $sumsB")
+    // each statement dropped its views when it ended
+    val left = spark.catalog.listTables().collect().map(_.name)
+      .filter(n => (idsA ++ idsB).exists(q => n.contains(q)))
+    assert(left.isEmpty, left.toSeq)
+  }
 }

@@ -58,6 +58,19 @@ class EmulatorServerSpec extends AnyFunSuite {
     assert(code == 200 && body.get("status").asText() == "ok")
   }
 
+  test("BEGIN/COMMIT round trips are not held back by delayed ACKs") {
+    // with Nagle's algorithm on, each reply waits ~40 ms for the client's
+    // delayed ACK; the statements themselves take about a millisecond
+    assert(query("SELECT 1")._2.get("success").asBoolean())
+    val ms = (1 to 20).map { i =>
+      val t0 = System.nanoTime()
+      val (_, body) = query(if (i % 2 == 1) "BEGIN" else "COMMIT")
+      assert(body.get("success").asBoolean(), body)
+      (System.nanoTime() - t0) / 1e6
+    }.sorted
+    assert(ms(ms.size / 2) < 20.0, ms)
+  }
+
   test("login issues tokens and default parameters") {
     val (_, body) = post("/session/v1/login-request",
       """{"data":{"LOGIN_NAME":"u2","PASSWORD":"p"}}""")
